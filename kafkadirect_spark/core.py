@@ -36,6 +36,40 @@ def _col(c: ColumnOrName) -> Column:
     return F.col(c) if isinstance(c, str) else c
 
 
+def _delay_ms(spec: str) -> int:
+    # Local import: the streaming package pulls in pandas-side modules
+    # that batch-only users of the DSL never need.
+    from kafkadirect_spark.streaming.util import interval_ms
+    return interval_ms(spec)
+
+
+def _watermark(df: DataFrame, ts: str, have: str | None, want: str,
+               what: str) -> tuple[DataFrame, str]:
+    """Give a streaming ``df`` an event-time watermark of at least
+    ``want`` on ``ts``; returns the frame and the delay in force.
+
+    Spark 4.1 allows one watermark per query ("Redefining watermark is
+    disallowed"), so when an upstream operator already applied delay
+    ``have`` it is reused if it is at least ``want`` — a longer delay
+    only keeps state longer.  A shorter one would drop records that
+    ``what`` must still accept, so that raises before the query
+    starts."""
+    if have is None:
+        return df.withWatermark(ts, want), want
+    if _delay_ms(want) > _delay_ms(have):
+        raise ValueError(
+            f"{what} {want!r} exceeds the event-time delay {have!r} "
+            "already applied upstream; a query has one watermark, so "
+            f"use {what} <= {have!r} or raise the upstream delay")
+    return df, have
+
+
+def _min_delay(*delays: str | None) -> str | None:
+    """The delay a union or join of watermarked inputs can promise
+    (Spark's watermark is the minimum over its inputs)."""
+    return min(filter(None, delays), key=_delay_ms, default=None)
+
+
 # ---------------------------------------------------------------------------
 # Window specs (kstream/TimeWindows.java, SessionWindows.java,
 # UnlimitedWindows.java, JoinWindows.java)
@@ -115,15 +149,20 @@ class Stream:
 
     Batch DataFrames model a bounded replay of the topic; streaming
     DataFrames (``readStream``) use the identical operator surface.
+    ``delay`` is the event-time watermark delay already applied to
+    ``df`` (None: no watermark yet); later event-time operators reuse
+    it instead of redefining the watermark.
     """
 
-    def __init__(self, df: DataFrame, key: str | None = None, ts: str | None = None):
+    def __init__(self, df: DataFrame, key: str | None = None, ts: str | None = None,
+                 delay: str | None = None):
         self.df = df
         self.key = key
         self.ts = ts
+        self.delay = delay
 
     def _with(self, df: DataFrame, key: str | None = None, ts: str | None = None) -> "Stream":
-        return Stream(df, key=key or self.key, ts=ts or self.ts)
+        return Stream(df, key=key or self.key, ts=ts or self.ts, delay=self.delay)
 
     # -- stateless transforms (§2.2) ------------------------------------
 
@@ -155,12 +194,12 @@ class Stream:
     def select_key(self, expr: ColumnOrName, name: str = "key") -> "Stream":
         """KStream.selectKey — KStream.java:111 (marks repartition in the
         reference; here the shuffle appears only if a stateful op follows)."""
-        return Stream(self.df.withColumn(name, _col(expr)), key=name, ts=self.ts)
+        return self._with(self.df.withColumn(name, _col(expr)), key=name)
 
     def map(self, key_expr: ColumnOrName, key_name: str = "key", **value_exprs: Column) -> "Stream":
         """KStream.map — KStream.java:149 (re-key + re-value)."""
         df = self.df.withColumn(key_name, _col(key_expr)).withColumns(dict(value_exprs))
-        return Stream(df, key=key_name, ts=self.ts)
+        return self._with(df, key=key_name)
 
     def select(self, *cols: ColumnOrName) -> "Stream":
         return self._with(self.df.select(*[_col(c) for c in cols]))
@@ -178,7 +217,8 @@ class Stream:
         the new columns).  Marks a re-key: downstream stateful ops
         shuffle on the new key (inserted by Catalyst only when needed)."""
         exploded = self.df.select(F.explode(expr).alias("_kv")).select("_kv.*")
-        return Stream(exploded, key=key, ts=self.ts if self.ts and self.ts in exploded.columns else None)
+        return Stream(exploded, key=key, ts=self.ts if self.ts and self.ts in exploded.columns else None,
+                      delay=self.delay)
 
     def branch(self, *predicates: Column) -> list["Stream"]:
         """KStream.branch — KStream.java:404 → KStreamBranch.java:40-52.
@@ -203,7 +243,8 @@ class Stream:
 
     def merge(self, other: "Stream") -> "Stream":
         """KStream.merge — KStream.java:417: UNION ALL, no dedup."""
-        return self._with(self.df.unionByName(other.df))
+        return Stream(self.df.unionByName(other.df), key=self.key, ts=self.ts,
+                      delay=_min_delay(self.delay, other.delay))
 
     def peek(self, action: Callable[[DataFrame], None]) -> "Stream":
         """KStream.peek — KStream.java:388. Batch: run observer on the
@@ -290,8 +331,10 @@ class Stream:
         if within is not None and df.isStreaming:
             if self.ts is None:
                 raise ValueError("deduplicate(within=...) requires an event-time column")
-            df = df.withWatermark(self.ts, within)
-            return self._with(df.dropDuplicatesWithinWatermark(idents))
+            df, delay = _watermark(df, self.ts, self.delay, within,
+                                   "deduplicate within")
+            return Stream(df.dropDuplicatesWithinWatermark(idents),
+                          key=self.key, ts=self.ts, delay=delay)
         return self._with(df.dropDuplicates(idents))
 
     def to_parquet(self, path: str, mode: str = "overwrite",
@@ -329,7 +372,7 @@ class Stream:
         if drop_null_keys:
             for c in cols:
                 df = df.filter(c.isNotNull())
-        return GroupedStream(df, cols, ts=self.ts)
+        return GroupedStream(df, cols, ts=self.ts, delay=self.delay)
 
     # -- joins (§2.3) ------------------------------------------------------
 
@@ -358,17 +401,22 @@ class Stream:
         )
         ldf = self.df.filter(_col(self.key).isNotNull()) if self.key else self.df
         rdf = other.df.filter(_col(other.key).isNotNull()) if other.key else other.df
+        ldelay, rdelay = self.delay, other.delay
         if ldf.isStreaming and rdf.isStreaming:
             # Both sides buffer in state; watermark = grace (JoinWindows.
             # grace, JoinWindows.java:233) bounds the buffers, defaulting
             # to the window span itself so state is GC'd as soon as no
             # future match is possible (KStreamImplJoin dual window
             # stores ≙ the two join-state stores here).
-            delay = windows.grace or windows.before
-            ldf = ldf.withWatermark(lts_name, delay)
-            rdf = rdf.withWatermark(rts_name, windows.grace or windows.after)
+            ldf, ldelay = _watermark(ldf, lts_name, ldelay,
+                                     windows.grace or windows.before,
+                                     "join grace")
+            rdf, rdelay = _watermark(rdf, rts_name, rdelay,
+                                     windows.grace or windows.after,
+                                     "join grace")
         joined = ldf.join(rdf, on & time_pred, how)
-        return Stream(joined, key=self.key, ts=self.ts)
+        return Stream(joined, key=self.key, ts=self.ts,
+                      delay=_min_delay(ldelay, rdelay))
 
     def join_table(self, table: "Table", on: Column, how: str = "inner") -> "Stream":
         """KStream⋈KTable lookup join — KStream.java:1604 →
@@ -377,7 +425,7 @@ class Stream:
         if how not in ("inner", "left"):
             raise ValueError("stream-table join supports inner/left only")
         ldf = self.df.filter(_col(self.key).isNotNull()) if self.key else self.df
-        return Stream(ldf.join(table.df, on, how), key=self.key, ts=self.ts)
+        return self._with(ldf.join(table.df, on, how))
 
     def join_global(self, gtable: "GlobalTable", on: Column, how: str = "inner") -> "Stream":
         """KStream⋈GlobalKTable — KStream.java:1873 →
@@ -385,7 +433,7 @@ class Stream:
         fully-replicated table ⇒ broadcast hash join, no shuffle."""
         if how not in ("inner", "left"):
             raise ValueError("global-table join supports inner/left only")
-        return Stream(self.df.join(F.broadcast(gtable.df), on, how), key=self.key, ts=self.ts)
+        return self._with(self.df.join(F.broadcast(gtable.df), on, how))
 
     # -- conversion ---------------------------------------------------------
 
@@ -404,10 +452,12 @@ class Stream:
 class GroupedStream:
     """KGroupedStream — KGroupedStreamImpl.java."""
 
-    def __init__(self, df: DataFrame, keys: list[Column], ts: str | None):
+    def __init__(self, df: DataFrame, keys: list[Column], ts: str | None,
+                 delay: str | None = None):
         self.df = df
         self.keys = keys
         self.ts = ts
+        self.delay = delay
 
     def count(self, name: str = "count") -> DataFrame:
         """KGroupedStream.count — KGroupedStream.java:71 →
@@ -441,20 +491,24 @@ class GroupedStream:
         """KStream.groupBy(...).windowedBy — TimeWindowedKStreamImpl.java."""
         if self.ts is None:
             raise ValueError("windowed aggregation requires an event-time column")
-        return WindowedGroupedStream(self.df, self.keys, self.ts, windows)
+        return WindowedGroupedStream(self.df, self.keys, self.ts, windows,
+                                     delay=self.delay)
 
 
 class WindowedGroupedStream:
     """TimeWindowedKStream / SessionWindowedKStream over F.window /
     F.session_window.  Late-record handling in streaming comes from
     ``withWatermark`` (grace ≙ watermark delay) — KStreamWindowAggregate
-    .java:96-153."""
+    .java:96-153.  An upstream delay (e.g. ``deduplicate(within=…)``)
+    serves as the grace when it is at least as long."""
 
-    def __init__(self, df: DataFrame, keys: list[Column], ts: str, windows: Windows):
+    def __init__(self, df: DataFrame, keys: list[Column], ts: str, windows: Windows,
+                 delay: str | None = None):
         self.df = df
         self.keys = keys
         self.ts = ts
         self.windows = windows
+        self.delay = delay
 
     def _grouped(self):
         df = self.df
@@ -464,7 +518,8 @@ class WindowedGroupedStream:
             df = df.filter(
                 F.col(self.ts) >= F.lit(self.windows.size).cast("timestamp"))
         if self.windows.grace and df.isStreaming:
-            df = df.withWatermark(self.ts, self.windows.grace)
+            df, _ = _watermark(df, self.ts, self.delay, self.windows.grace,
+                               "window grace")
         w = self.windows.window_col(self.ts)
         return df.groupBy(w.alias("window"), *self.keys)
 

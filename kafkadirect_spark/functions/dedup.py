@@ -829,19 +829,20 @@ def containment_pairs(
         # but the SELF-JOIN below re-exchanges the capped index twice
         # more and the string is pure routing there (never read
         # downstream).  Assign each surviving shingle a dense 8-byte
-        # id instead: ``monotonically_increasing_id`` AFTER a
-        # ``sortWithinPartitions`` makes the assignment DETERMINISTIC
-        # (partition = hash(shingle) within the executed plan, offset
-        # = rank in the sorted partition), so a recomputed cache
-        # partition reproduces the same ids — exact, collision-free,
-        # and no extra exchange (the sort rides the freq aggregate's
-        # existing partitioning).  Pair counts are identical by
-        # bijection; the persisted index also shrinks to (id, sid).
+        # id instead: ``monotonically_increasing_id`` after a
+        # ``sortWithinPartitions`` — exact, collision-free, and no
+        # extra exchange (the sort rides the freq aggregate's existing
+        # partitioning).  The ids depend on that partition layout
+        # (shuffle partitions, AQE coalescing), so the tiny ``keys``
+        # frame is persisted: the assignment is made once, and a lost
+        # cache partition of the index re-joins against it instead of
+        # re-deriving ids.  Pair counts are identical by bijection;
+        # the persisted index also shrinks to (id, sid).
         freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-        keys = (freq.filter(F.col("df") <= max_doc_freq)
-                .select("shingle")
-                .sortWithinPartitions("shingle")
-                .withColumn("__sid", F.monotonically_increasing_id()))
+        keys = _persist(freq.filter(F.col("df") <= max_doc_freq)
+                        .select("shingle")
+                        .sortWithinPartitions("shingle")
+                        .withColumn("__sid", F.monotonically_increasing_id()))
         sh = _persist(sh.join(keys, "shingle")
                       .select(F.col(id_col), "__sid"))
         join_key = "__sid"

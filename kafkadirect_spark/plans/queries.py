@@ -520,30 +520,6 @@ def join_stream_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("event_id", "user_id", "value", "c_name", "c_mktsegment").df
 
 
-# RETIRED r13 (registration-budget policy item c): the interval-join
-# family already consolidated left into inner+outer (r11) — the same
-# subsumption applies here: `join_stream_table` drives the identical
-# Stream.join_table lookup path (core.py:373) at how="inner", and the
-# left-padding semantics (unmatched stream records emit
-# joiner(v, null), KStream.java:1760) stay driver-checked through
-# `join_interval_outer`'s two-sided padding and the KTable⋈KTable
-# outer row.  The operator and its pytest goldens remain in the
-# library.
-def join_stream_table_left(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left lookup join — unmatched stream records emit joiner(v, null)
-    (KStream.java:1760)."""
-    ev = Stream(load_table(spark, sf_dir, "events"), key="user_id", ts="ts")
-    cust = Table(
-        load_table(spark, sf_dir, "customer").filter(F.col("c_acctbal") > 5000),
-        key="c_custkey",
-    )
-    out = (
-        ev.filter(F.col("event_type") == "signup")
-        .join_table(cust, on=F.col("user_id") == F.col("c_custkey"), how="left")
-    )
-    return out.select("event_id", "user_id", "c_name").df
-
-
 @query(
     "join_interval_inner",
     oracle="""

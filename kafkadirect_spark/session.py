@@ -15,19 +15,28 @@ from pyspark.sql import SparkSession
 def get_spark(
     app_name: str = "kafkadirect-spark",
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for this engine.
 
     ``cpus`` defaults to $SPARK_GRAFT_CPUS or all local cores.
-    ``shuffle_partitions`` defaults to 2x cpus locally; on a real
-    cluster you would size it so post-shuffle partitions are
-    ~128-256 MB (AQE coalescing makes the exact number forgiving).
+
+    ``spark.sql.shuffle.partitions`` is set to ``cpus``: one task wave.
+    Batch plans barely care, because AQE coalesces small shuffles down
+    to ``defaultParallelism`` anyway.  Streaming plans get no AQE, so
+    the number is taken literally there: every stateful operator runs
+    one state store per shuffle partition, each store is a task and a
+    checkpointed delta-file commit on EVERY microbatch however little
+    state it holds, and the count is fixed by the query's first
+    checkpoint (restarts restore it from the offset log).  Twice the
+    cores would mean two task waves and twice the commits per trigger
+    for no extra parallelism.  On a real cluster you would size it so
+    post-shuffle partitions are ~128-256 MB (AQE coalescing makes the
+    exact number forgiving for batch; for a stateful stream, pick it
+    for the state size the query will grow to, since it cannot change
+    later).
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    if shuffle_partitions is None:
-        shuffle_partitions = max(2 * cpus, 8)
     builder = SparkSession.builder.appName(app_name)
     # On a real cluster the master comes from spark-submit; only default
     # to local[] when none is configured (e.g. unit tests, bench).
@@ -46,7 +55,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         # Runtime Bloom-filter join pruning (default-on in modern
         # Spark; pinned explicitly because it is a 100 TB lever): a
         # selective-but-unbroadcastable join side injects a Bloom

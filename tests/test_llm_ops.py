@@ -770,6 +770,32 @@ def test_containment_how_rejects_unknown(spark):
         dedup.containment_pairs(df, "text", "doc_id", how="left")
 
 
+def test_containment_pairs_same_rows_across_shuffle_partitions(spark):
+    """The dense shingle ids follow the freq shuffle's partition layout;
+    the pairs must not.  Coalescing is off so 4 and 8 partitions really
+    are two layouts."""
+    words = [f"w{i}" for i in range(20)]
+    rows = [(i, " ".join(words[i % 7:i % 7 + 6 + i % 5])) for i in range(30)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    old = {k: spark.conf.get(k) for k in (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.adaptive.coalescePartitions.enabled")}
+    got = {}
+    try:
+        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled",
+                       "false")
+        for parts in (4, 8):
+            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+            got[parts] = sorted(tuple(r) for r in dedup.containment_pairs(
+                df, "text", "doc_id", n=3, threshold=0.5,
+                max_doc_freq=20).collect())
+            dedup.release_caches()
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+    assert got[4] and got[4] == got[8]
+
+
 def test_incremental_lsh_equals_full_minus_index(docs):
     sigs = dedup.minhash_signatures(docs, "text", "doc_id")
     new = sigs.filter(F.col("doc_id") % 5 == 0)

@@ -7,6 +7,7 @@ KTableSuppressProcessor.java:71-110, KStreamTransformValues.java,
 KTableAggregate.java:72-98.
 """
 
+import json
 import os
 import shutil
 import tempfile
@@ -1893,3 +1894,116 @@ def test_streaming_cusum_state_envelope_high_cardinality(spark, tmpdir):
     assert len(st["hot"]) <= envelope
     # total state is key-linear with a pinned constant: ≤ 160 B/key
     assert sum(len(s) for s in st.values()) <= 160 * 302
+
+
+# ---------------------------------------------------------------------------
+# One watermark per query; restart across shuffle-partition counts
+# ---------------------------------------------------------------------------
+
+
+def test_deduplicate_then_windowed_grace_shares_one_watermark(spark, tmpdir):
+    """deduplicate(within=…) then windowed_by(grace=…): Spark allows one
+    watermark per query, so a grace no longer than the dedup delay
+    reuses it, and a longer one is refused before the query starts."""
+    _write_batch(spark, tmpdir, [("a", 1, t("10:00:10")),
+                                 ("a", 1, t("10:00:10")),   # producer retry
+                                 ("a", 2, t("10:00:20")),
+                                 ("b", 3, t("10:00:30"))], 0)
+    src = stream_from_dir(spark, f"{tmpdir}/in/*", KV, key="key", ts="ts")
+    deduped = src.deduplicate("key", "value", within="30 seconds")
+    with pytest.raises(ValueError, match="'2 minutes'.*'30 seconds'"):
+        (deduped.group_by_key()
+         .windowed_by(Windows.tumbling("1 minute", grace="2 minutes"))
+         .count(name="n"))
+    agg = (deduped.group_by_key()
+           .windowed_by(Windows.tumbling("1 minute", grace="10 seconds"))
+           .count(name="n"))
+    q = (agg.writeStream.outputMode("append").format("memory")
+         .queryName("dedup_win")
+         .option("checkpointLocation", f"{tmpdir}/ckpt").start())
+    try:
+        q.processAllAvailable()
+        # stream time 10:02 - 30 s delay closes the 10:00 window
+        _write_batch(spark, tmpdir, [("a", 4, t("10:02:00"))], 1)
+        q.processAllAvailable()
+        rows = sorted((r.key, r.n) for r in spark.sql(
+            "SELECT * FROM dedup_win").collect())
+        assert rows == [("a", 2), ("b", 1)]
+    finally:
+        q.stop()
+
+
+def test_carried_delay_bounds_later_event_time_operators(spark, tmpdir):
+    """A join or a merge after deduplicate(within=…) also reuses the one
+    watermark; a grace beyond what it promises fails at build time and
+    names both values.  A merge promises the smaller input delay."""
+    from kafkadirect_spark.core import JoinWindows
+
+    _write_batch(spark, tmpdir, [("a", 1, t("10:00:10"))], 0)
+    src = stream_from_dir(spark, f"{tmpdir}/in/*", KV, key="key", ts="ts")
+    slow = src.deduplicate("key", "value", within="1 minute")
+    fast = src.deduplicate("key", "value", within="10 seconds")
+    right = Stream(src.df.select(F.col("key").alias("rkey"),
+                                 F.col("ts").alias("rts")),
+                   key="rkey", ts="rts")
+    on = F.col("key") == F.col("rkey")
+    with pytest.raises(ValueError, match="'5 minutes'.*'1 minute'"):
+        slow.join_interval(right, on, JoinWindows.of("5 minutes"))
+    joined = slow.join_interval(
+        right, on, JoinWindows.of("5 minutes", grace="30 seconds"))
+    assert joined.delay == "30 seconds"
+    merged = slow.merge(fast)
+    assert merged.delay == "10 seconds"
+    with pytest.raises(ValueError, match="'20 seconds'.*'10 seconds'"):
+        (merged.group_by_key()
+         .windowed_by(Windows.tumbling("1 minute", grace="20 seconds"))
+         .count())
+
+
+def test_windowed_count_restart_keeps_state_partitions(spark, tmpdir):
+    """Restart from a checkpoint under another shuffle-partition count:
+    Spark restores the state-store count from the offset log, so the
+    restarted query still runs 8 stores, emits no (window, key) twice,
+    and its totals equal a batch count over the closed windows."""
+    conf = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(conf)
+
+    def run(partitions, files):
+        for n, rows in files:
+            _write_batch(spark, tmpdir, rows, n)
+        spark.conf.set(conf, str(partitions))
+        src = stream_from_dir(spark, f"{tmpdir}/in/*", KV, key="key", ts="ts")
+        agg = (src.group_by_key()
+               .windowed_by(Windows.tumbling("1 minute", grace="10 seconds"))
+               .count(name="n"))
+        q = (agg.writeStream.outputMode("append").format("parquet")
+             .option("path", f"{tmpdir}/out")
+             .option("checkpointLocation", f"{tmpdir}/ckpt")
+             .trigger(availableNow=True).start())
+        q.awaitTermination()
+        return {op["numStateStoreInstances"]
+                for p in q.recentProgress
+                for op in json.loads(p.json)["stateOperators"]}
+
+    try:
+        assert run(8, [(0, [("a", 1, t("10:00:05")), ("a", 1, t("10:00:15")),
+                            ("b", 1, t("10:00:20"))]),
+                       (1, [("a", 1, t("10:01:10")),
+                            ("b", 1, t("10:01:30"))])]) == {8}
+        assert run(4, [(2, [("a", 1, t("10:02:10")),
+                            ("c", 1, t("10:02:40"))]),
+                       (3, [("a", 1, t("10:03:30"))])]) == {8}
+    finally:
+        spark.conf.set(conf, old)
+
+    out = [(r.window.start, r.key, r.n)
+           for r in spark.read.parquet(f"{tmpdir}/out").collect()]
+    assert len({(w, k) for w, k, _ in out}) == len(out)
+    events = spark.read.schema(KV).parquet(f"{tmpdir}/in/*")
+    watermark = events.agg(F.max("ts")).first()[0] - pd.Timedelta("10s")
+    want = [(r.window.start, r.key, r.n) for r in
+            events.groupBy(F.window("ts", "1 minute"), "key")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .filter(F.col("window.end") <= F.lit(watermark)).collect()]
+    assert sorted(out) == sorted(want)
+    assert len(want) == 6   # a, b at 10:00 and 10:01; a, c at 10:02
